@@ -94,19 +94,22 @@ def minhash_params(n_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     ]
 
 
-def _minhash_signatures_np(
-    docs: DataFrame, text_col: str, n_hashes: int, k: int
+def minhash_signatures(
+    docs: DataFrame, text_col: str = "text", n_hashes: int = 16, k: int = 3
 ) -> DataFrame:
-    """Arrow-batched numpy twin of the relational minhash: per batch,
-    md5 each DISTINCT shingle once (digest cache carried across
-    batches — shingle distribution is Zipfian, like simhash64's token
-    cache) and collapse all ``n_hashes`` affine families to one
-    (families × shingles) broadcast + row-min. Bit-identical to the
-    SQL path: same md5-first-4-bytes base hash, same int64 affine
-    arithmetic (a < 2^31 keeps a·h + b < 2^63 — no overflow), same
-    mod-P min. Zero shuffle either way; this variant just moves the
-    16-family per-element interpreted HOF work into one vectorized
-    kernel."""
+    """(doc_id, shingles, sig): ONE md5 base hash per shingle (first 4
+    digest bytes as a 32-bit int, reproduced by the DuckDB oracle), then
+    ``n_hashes`` affine families (a_i*h + b_i) mod P — the standard
+    universal-hashing MinHash. Docs with NULL text or fewer than k
+    tokens are dropped (no shingle support).
+
+    One Arrow-batched kernel: per batch, md5 each DISTINCT shingle once
+    (digest cache carried across batches — shingle distribution is
+    Zipfian, like simhash64's token cache) and collapse all families to
+    one (families × shingles) broadcast + row-min. Int64 throughout:
+    a < 2^31 keeps a·h + b < 2^63 (no overflow). Zero shuffle.
+    Tokens are extras.text.tokens()'s: lowercase, split on Java's
+    ASCII-only \\s+ class."""
     import numpy as np
     import pandas as pd
 
@@ -120,7 +123,7 @@ def _minhash_signatures_np(
 
         # Java \s is ASCII-only ([ \t\n\x0B\f\r]); Python str.split()
         # also splits on unicode whitespace (\xa0, 　, ...), which
-        # would silently break bit-identity with the relational path
+        # would silently break agreement with tokens() and the oracle
         # on non-ASCII corpora — split with the exact same class.
         ws = re.compile("[ \t\n\x0b\f\r]+")
         h32: dict[str, int] = {}
@@ -128,7 +131,7 @@ def _minhash_signatures_np(
             out_id, out_sh, out_sig = [], [], []
             for doc_id, txt in zip(pdf["doc_id"], pdf[text_col]):
                 if not isinstance(txt, str):
-                    continue  # NULL text: the SQL path drops it too
+                    continue
                 toks = [t for t in ws.split(txt.lower()) if t]
                 if len(toks) < k:
                     continue
@@ -160,69 +163,11 @@ def _minhash_signatures_np(
                 }
             )
 
-    return docs.select("doc_id", text_col).mapInPandas(
+    # local small-file scans arrive as 1-2 splits, serializing the
+    # tokenize+hash map work; no-op on well-split inputs
+    return ensure_map_parallelism(docs).select("doc_id", text_col).mapInPandas(
         gen, "doc_id long, shingles array<string>, sig array<long>"
     )
-
-
-def minhash_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    n_hashes: int = 16,
-    k: int = 3,
-    hash_impl: str = "md5",
-    impl: str = "auto",
-) -> DataFrame:
-    """(doc_id, shingles, sig): ONE base hash per shingle, then
-    ``n_hashes`` affine families (a_i*h + b_i) mod P — the standard
-    universal-hashing MinHash. The expensive digest runs once per
-    shingle instead of once per (family, shingle): 16x less hashing on
-    the scan-dominated path. Docs with fewer than k tokens are dropped
-    (no shingle support).
-
-    ``hash_impl``: the base hash FEEDS the signature values, so unlike
-    duplicated_spans/source_overlap it is NOT output-invariant.
-    "md5" (default) takes the digest's first 8 hex chars as a 32-bit
-    int and is reproducible in the DuckDB oracle; "xxhash64" folds the
-    JVM hash into 32 bits with no string digest — the production
-    setting when cross-engine reproducibility isn't needed (signatures
-    differ from md5 mode, Jaccard-estimate quality is identical).
-
-    ``impl``: "sql" = pure relational HOFs; "numpy" = Arrow-batched
-    kernel, output bit-identical (md5 mode only); "auto" picks numpy
-    for md5 (measured faster: the 16 interpreted HOF transforms
-    dominate the relational path) and sql for xxhash64."""
-    if impl == "auto":
-        impl = "numpy" if hash_impl == "md5" else "sql"
-    # local small-file scans arrive as 1-2 splits, serializing the
-    # tokenize+hash map work below; no-op on well-split inputs
-    docs = ensure_map_parallelism(docs)
-    if impl == "numpy":
-        if hash_impl != "md5":
-            raise ValueError("impl='numpy' supports hash_impl='md5' only")
-        return _minhash_signatures_np(docs, text_col, n_hashes, k)
-    t = docs.withColumn("toks", tokens(F.col(text_col))).filter(
-        F.size("toks") >= k
-    )
-    t = t.withColumn("shingles", shingles(F.col("toks"), k))
-    if hash_impl == "md5":
-        base = lambda s: F.conv(  # noqa: E731
-            F.substring(F.md5(s.cast("binary")), 1, 8), 16, 10
-        ).cast("long")
-    elif hash_impl == "xxhash64":
-        base = lambda s: F.pmod(F.xxhash64(s), F.lit(2**32))  # noqa: E731
-    else:
-        raise ValueError(f"unknown hash_impl: {hash_impl!r}")
-    t = t.withColumn("h32", F.transform(F.col("shingles"), base))
-    params = minhash_params(n_hashes)
-
-    def family(a: int, b: int):
-        return lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(MINHASH_PRIME)
-
-    sig = F.array(
-        *[F.array_min(F.transform(F.col("h32"), family(a, b))) for a, b in params]
-    )
-    return t.select("doc_id", "shingles", sig.alias("sig")).drop("h32")
 
 
 def band_rows(
@@ -785,12 +730,24 @@ def simhash64(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def _span_keys(toks: Column, n: int) -> Column:
+    """One xxhash64 key per word ``n``-gram position of ``toks`` (size
+    >= n): the JVM hash of the token slice itself — no string concat,
+    no digest. The key is a pure internal join key, so every span
+    operator's OUTPUT is invariant under any injective hash and the
+    DuckDB oracles group by gram content instead (collision limit:
+    see duplicated_spans)."""
+    return F.transform(
+        F.sequence(F.lit(0), F.size(toks) - n),
+        lambda i: F.xxhash64(F.slice(toks, i + 1, n)),
+    )
+
+
 def duplicated_spans(
     docs: DataFrame,
     n: int = 8,
     text_col: str = "text",
     round_digits: int = 6,
-    hash_impl: str = "xxhash64",
 ) -> DataFrame:
     """Exact-substring duplication signal at word-span granularity
     (Lee et al. 2022, arXiv:2107.06499: spans repeated across a corpus
@@ -807,16 +764,12 @@ def duplicated_spans(
     explode -> two keyed shuffles, never all-pairs. The exploded
     relation is persisted: one corpus scan, both consumers.
 
-    The span key is ``xxhash64`` over the raw token slice (JVM hash of
-    the array value — no string concat, no digest): the hash is a pure
-    internal join key, so the OUTPUT (counts/fractions) is invariant
-    under any injective hash and the DuckDB oracle can group by gram
-    content instead. The r02 md5(concat_ws(...)) path spent most of
-    its CPU building+digesting 8-word strings per position — measured
-    ~2x end-to-end. Collision note: 64-bit keys start colliding around
-    2^32 distinct spans (~actual corpora at 100 TB see ~1e-4 relative
-    undercount); pass hash_impl="md5" when exact 128-bit keys matter
-    more than throughput.
+    Span keys are ``_span_keys``' xxhash64 over the raw token slice
+    (an md5(concat_ws(...)) key spent most of its CPU building and
+    digesting 8-word strings per position — measured ~2x end-to-end).
+    Stated limit: 64-bit keys start colliding around 2^32 distinct
+    spans, and a collision merges two spans (~1e-4 relative undercount
+    at 100 TB corpus sizes).
 
     Returns (doc_id, n_grams, dup_grams, dup_frac) for every doc with
     at least ``n`` tokens.
@@ -825,18 +778,7 @@ def duplicated_spans(
         docs.select("doc_id", tokens(F.col(text_col)).alias("toks"))
         .filter(F.size("toks") >= n)
     )
-    if hash_impl == "xxhash64":
-        grams = F.transform(
-            F.sequence(F.lit(0), F.size("toks") - n),
-            lambda i: F.xxhash64(F.slice(F.col("toks"), i + 1, n)),
-        )
-    elif hash_impl == "md5":
-        grams = F.transform(
-            F.sequence(F.lit(0), F.size("toks") - n),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(F.col("toks"), i + 1, n))),
-        )
-    else:
-        raise ValueError(f"unknown hash_impl: {hash_impl!r}")
+    grams = _span_keys(F.col("toks"), n)
     g = t.select("doc_id", F.explode(grams).alias("g")).persist()
     dup = (
         g.dropDuplicates(["doc_id", "g"])
@@ -872,7 +814,6 @@ def source_overlap(
     text_col: str = "text",
     source_col: str = "source",
     round_digits: int = 6,
-    hash_impl: str = "xxhash64",
 ) -> DataFrame:
     """Cross-source n-gram overlap matrix — the corpus-audit view of
     inter-source duplication/leakage (how much of source A's distinct
@@ -881,10 +822,10 @@ def source_overlap(
     same text, so their mixing weights overlap.
 
     Scale shape: the heavy relation is (source, gram) distinct pairs —
-    ONE explode + dedupe keyed on a fixed-width hash (xxhash64 over
-    the token slice by default; the hash never reaches the output, so
-    the overlap counts are hash-choice-invariant — same argument and
-    same collision caveat as duplicated_spans). Pair counting
+    ONE explode + dedupe keyed on a fixed-width hash (``_span_keys``;
+    the hash never reaches the output, so the overlap counts are
+    hash-choice-invariant — same argument and same collision caveat
+    as duplicated_spans). Pair counting
     groups by gram and expands the per-gram source list into ordered
     pairs; that list is bounded by the number of sources (small by
     construction), so the expansion is O(shared grams * sources^2)
@@ -899,18 +840,7 @@ def source_overlap(
                     tokens(F.col(text_col)).alias("toks"))
         .filter(F.size("toks") >= n)
     )
-    if hash_impl == "xxhash64":
-        grams = F.transform(
-            F.sequence(F.lit(0), F.size("toks") - n),
-            lambda i: F.xxhash64(F.slice(F.col("toks"), i + 1, n)),
-        )
-    elif hash_impl == "md5":
-        grams = F.transform(
-            F.sequence(F.lit(0), F.size("toks") - n),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(F.col("toks"), i + 1, n))),
-        )
-    else:
-        raise ValueError(f"unknown hash_impl: {hash_impl!r}")
+    grams = _span_keys(F.col("toks"), n)
     # ONE shuffle of the exploded gram stream (by g) carries both
     # downstream aggregations: collect_set dedupes (source, g) pairs
     # with map-side partial sets — the old dropDuplicates + regroup
@@ -1203,7 +1133,6 @@ def longest_dup_span(
     docs: DataFrame,
     n: int = 8,
     text_col: str = "text",
-    hash_impl: str = "xxhash64",
 ) -> DataFrame:
     """Longest cross-document duplicated TOKEN RUN per document — the
     span-length view of duplicated_spans. Lee et al. 2022 dedup at
@@ -1228,18 +1157,7 @@ def longest_dup_span(
     t = docs.select("doc_id", tokens(F.col(text_col)).alias("toks")).filter(
         F.size("toks") >= n
     )
-    if hash_impl == "xxhash64":
-        grams = F.transform(
-            F.sequence(F.lit(0), F.size("toks") - n),
-            lambda i: F.xxhash64(F.slice(F.col("toks"), i + 1, n)),
-        )
-    elif hash_impl == "md5":
-        grams = F.transform(
-            F.sequence(F.lit(0), F.size("toks") - n),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(F.col("toks"), i + 1, n))),
-        )
-    else:
-        raise ValueError(f"unknown hash_impl: {hash_impl!r}")
+    grams = _span_keys(F.col("toks"), n)
     g = t.select("doc_id", F.posexplode(grams).alias("pos", "g")).persist()
     dup = (
         g.dropDuplicates(["doc_id", "g"])

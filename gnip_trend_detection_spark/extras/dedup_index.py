@@ -11,7 +11,9 @@ Layout:
   <path>/meta/    1 row — (n_hashes, rows_per_band, k, hash_impl);
                   probes re-derive the exact hashing recipe from this,
                   so an index can never be probed with mismatched
-                  parameters.
+                  parameters; hash_impl is always 'md5', and a meta
+                  naming another hash raises instead of mixing
+                  hash families.
   <path>/sigs/    (doc_id, sig array<long>) — one row per indexed doc.
   <path>/bands/   (band_val, doc_id) Hive-partitioned by band id b=N/.
 
@@ -51,6 +53,11 @@ from pyspark.sql import functions as F
 from gnip_trend_detection_spark.extras.dedup import band_rows, minhash_signatures
 
 
+# the base hash minhash_signatures uses; written to every index's meta
+# so an index built under another hash is refused, never mixed
+INDEX_HASH = "md5"
+
+
 def build_dedup_index(
     docs: DataFrame,
     path: str,
@@ -59,16 +66,15 @@ def build_dedup_index(
     n_hashes: int = 16,
     rows_per_band: int = 2,
     k: int = 3,
-    hash_impl: str = "md5",
 ) -> None:
     """One corpus pass → persisted signature + band state."""
     spark = docs.sparkSession
     spark.createDataFrame(
-        [(n_hashes, rows_per_band, k, hash_impl)],
+        [(n_hashes, rows_per_band, k, INDEX_HASH)],
         "n_hashes int, rows_per_band int, k int, hash_impl string",
     ).write.mode("overwrite").parquet(f"{path}/meta")
     sigs = minhash_signatures(
-        docs, text_col=text_col, n_hashes=n_hashes, k=k, hash_impl=hash_impl
+        docs, text_col=text_col, n_hashes=n_hashes, k=k
     ).select("doc_id", "sig")
     sigs.write.mode("overwrite").parquet(f"{path}/sigs")
     band_rows(sigs, rows_per_band, n_hashes=n_hashes).select(
@@ -80,6 +86,12 @@ def _read_meta(spark: SparkSession, path: str) -> dict:
     row = spark.read.parquet(f"{path}/meta").first()
     if row is None:
         raise ValueError(f"dedup index at {path!r} has an empty meta table")
+    if row["hash_impl"] != INDEX_HASH:
+        raise ValueError(
+            f"dedup index at {path!r} was built with hash_impl="
+            f"{row['hash_impl']!r}; minhash_signatures hashes with "
+            f"{INDEX_HASH!r}, and mixing hash families breaks band matching"
+        )
     return row.asDict()
 
 
@@ -106,7 +118,6 @@ def probe_dedup_index(
         text_col=text_col,
         n_hashes=meta["n_hashes"],
         k=meta["k"],
-        hash_impl=meta["hash_impl"],
     ).select("doc_id", "sig")
     bands_new = band_rows(
         sigs_new, meta["rows_per_band"], n_hashes=meta["n_hashes"]
@@ -174,7 +185,6 @@ def append_to_index(
         text_col=text_col,
         n_hashes=meta["n_hashes"],
         k=meta["k"],
-        hash_impl=meta["hash_impl"],
     ).select("doc_id", "sig")
     # bands BEFORE sigs: the two appends are not one atomic commit, so
     # order them so every partial state degrades gracefully AND a

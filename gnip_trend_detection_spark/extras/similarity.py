@@ -1251,7 +1251,6 @@ def embedding_simhash(
     dim: int = 64,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    impl: str = "numpy",
 ) -> DataFrame:
     """Sign-random-projection sketch for dense vectors (Charikar 2002
     — the embedding-space analog of extras/dedup.py:simhash64):
@@ -1264,85 +1263,44 @@ def embedding_simhash(
     arithmetic end to end. floor(double * quant) is bit-deterministic
     (one correctly-rounded IEEE product, then floor — no decimal-ROUND
     tie semantics), and the sign matrix s_ij in {+1,-1} derives from
-    md5(f"{seed}:{j}:{i}") at PLAN-BUILD time, inlined as literal
-    arrays into both the Spark plan and the DuckDB oracle — the same
-    inlined-seeded-planes pattern as lsh_bucketed_topk, minus every
-    float fold.
+    md5(f"{seed}:{j}:{i}") at PLAN-BUILD time, shared verbatim with the
+    DuckDB oracle — the same seeded-planes pattern as
+    lsh_bucketed_topk, minus every float fold.
+
+    Kernel: one Arrow-batched int64 matmul (floor(V*quant) @ S.T) per
+    batch — every op after the one IEEE multiply is int64, so it is
+    exact. A vector whose length differs from ``dim`` fails the
+    matmul's shape check loudly instead of producing a sketch.
 
     Scale: one scan, one sketch-keyed window for the bucket size —
     the only shuffle. 100 TB shape: buckets replace the all-pairs
     cosine sweep the same way LSH bands do.
-
-    impl='numpy' (default) — one Arrow-batched integer matmul
-    (floor(V*quant) @ S.T) per batch; bit-identical to the HOF fold
-    because EVERY op after the one IEEE multiply is int64 arithmetic
-    (asserted impl-vs-impl in tests). 'sql' keeps the pure relational
-    fold the oracle mirrors term by term (measured 1.48s → numpy
-    ~0.2s at sf0.1: 16 interpreted HOF folds x 64 dims dominated).
     """
-    signs = simhash_sign_matrix(n_bits, dim, seed)
-    if impl == "numpy":
-        import numpy as np
-        import pandas as pd
+    import numpy as np
+    import pandas as pd
 
-        smat = np.asarray(signs, dtype=np.int64)  # (n_bits, dim)
-        weights = (1 << np.arange(n_bits)).astype(np.int64)
-        fquant = float(quant)
+    smat = np.asarray(simhash_sign_matrix(n_bits, dim, seed), dtype=np.int64)
+    weights = (1 << np.arange(n_bits)).astype(np.int64)
+    fquant = float(quant)
 
-        def kernel(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    yield pd.DataFrame({"vec_id": [], "sketch": []})
-                    continue
-                v = np.vstack(
-                    [np.asarray(x, dtype=np.float64) for x in pdf[vec_col]]
-                )
-                q = np.floor(v * fquant).astype(np.int64)
-                proj = q @ smat.T  # (n, n_bits) int64 — exact
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf[id_col].to_numpy(),
-                        "sketch": ((proj >= 0) @ weights).astype(np.int64),
-                    }
-                )
-
-        out = embeddings.select(id_col, vec_col).mapInPandas(
-            kernel, "vec_id long, sketch long"
-        )
-    else:
-        q = F.transform(
-            as_double(F.col(vec_col)), lambda x: F.floor(x * F.lit(float(quant)))
-        )
-        proj = [
-            F.aggregate(
-                F.zip_with(
-                    q,
-                    F.array(*[F.lit(s) for s in signs[j]]),
-                    lambda a, b: a * b.cast("long"),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
+    def kernel(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                yield pd.DataFrame({"vec_id": [], "sketch": []})
+                continue
+            v = np.vstack([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]])
+            q = np.floor(v * fquant).astype(np.int64)
+            proj = q @ smat.T  # (n, n_bits) int64 — exact
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf[id_col].to_numpy(),
+                    "sketch": ((proj >= 0) @ weights).astype(np.int64),
+                }
             )
-            for j in range(n_bits)
-        ]
-        sketch = proj[0] * F.lit(0)
-        for j in range(n_bits):
-            sketch = sketch + F.when(proj[j] >= 0, F.lit(1 << j)).otherwise(
-                F.lit(0)
-            )
-        # loud dim guard inside the projected column (so pruning can't
-        # drop it): zip_with pads a short vector with NULLs, which
-        # would silently fold every proj to NULL and collapse all rows
-        # into one NULL-sketch bucket — the numpy path raises a shape
-        # error on the same input, so make this path fail loudly too
-        sketch = F.when(F.size(F.col(vec_col)) == dim, sketch).otherwise(
-            F.raise_error(
-                F.lit(f"embedding_simhash: vector length != dim={dim}")
-            ).cast("long")
-        )
-        out = embeddings.select(
-            F.col(id_col).alias("vec_id"), sketch.cast("long").alias("sketch")
-        )
+
+    out = embeddings.select(id_col, vec_col).mapInPandas(
+        kernel, "vec_id long, sketch long"
+    )
     return out.select(
         "vec_id",
         "sketch",

@@ -60,6 +60,16 @@ def _sq_l2(a: Column, b: Column) -> Column:
 DISTANCES = {"l1": _l1, "sq_l2": _sq_l2}
 
 
+def check_distance(distance: str) -> None:
+    """The one name check every WDT scorer (HOF, numpy, streaming)
+    runs before building anything: an unknown name is an error, never
+    a silent fall-through to some other distance."""
+    if distance not in DISTANCES:
+        raise ValueError(
+            f"unknown WDT distance {distance!r}; expected one of {sorted(DISTANCES)}"
+        )
+
+
 def min_subwindow_distance(ref: Column, test: Column, length: int, distance: str) -> Column:
     """min over all length-L contiguous sub-windows of `ref` of
     d(sub, test) — reference models.py:194-213 + library.py:12-19."""
@@ -112,6 +122,7 @@ def weighted_data_templates(
     series never votes for itself. Equality is ordered array
     equality, same as the reference's list ``==``.
     """
+    check_distance(distance)
     w = Window.partitionBy("counter").orderBy(ts_col)
     hist = F.collect_list(F.col("count").cast("double")).over(
         w.rowsBetween(-(reference_length - 1), 0)
@@ -202,6 +213,66 @@ def weighted_data_templates(
     return out.select("counter", "interval_start", "count", eta.alias("eta"))
 
 
+def library_groups(rows, series_length: int):
+    """[(mat, is_trend)]: ``(is_trend, points)`` library rows grouped
+    by length into dense (n_series, length) float64 matrices. Lengths
+    below ``series_length`` are dropped — no sub-window, so their
+    weight is exp(-inf) == 0 (models.py:206). Only these matrices are
+    shipped to executors; the sub-window views are built there by
+    ``eta_numpy`` (a pickled sliding_window_view is a full copy,
+    ``series_length`` times the matrix)."""
+    import numpy as np
+
+    by_len: dict[int, list] = {}
+    for is_trend, points in rows:
+        by_len.setdefault(len(points), []).append((is_trend, points))
+    return [
+        (
+            np.vstack([np.asarray(p, dtype=np.float64) for _, p in rs]),
+            np.array([bool(t) for t, _ in rs]),
+        )
+        for length, rs in by_len.items()
+        if length >= series_length
+    ]
+
+
+def eta_numpy(
+    tv,
+    groups,
+    series_length: int,
+    lam: float,
+    distance: str,
+    check_for_self: bool = False,
+) -> float:
+    """η of one transformed test series ``tv`` against the
+    ``library_groups`` matrices: per library row, the min distance over
+    its length-``series_length`` sub-windows, weight exp(-lam·d), then
+    trend / non-trend weight sums with the SMALL_NUMBER floor. Shared
+    by the batch numpy kernel and the streaming scorer."""
+    import numpy as np
+
+    tw = nw = 0.0
+    for mat, trend in groups:
+        wins = np.lib.stride_tricks.sliding_window_view(mat, series_length, axis=1)
+        if distance == "l1":
+            d = np.abs(wins - tv).sum(axis=2).min(axis=1)
+        else:
+            dd = wins - tv
+            d = (dd * dd).sum(axis=2).min(axis=1)
+        w = np.exp(-lam * d)
+        if check_for_self and mat.shape[1] == series_length:
+            # self-exclusion (models.py:201-204): a library row
+            # bit-equal to the test series votes 0. NaN-aware so both
+            # impls agree: Spark's array equality treats NaN = NaN as
+            # true, while raw numpy == would exclude NaN points from
+            # the match and keep a NaN-bearing self row
+            eq = (mat == tv) | (np.isnan(mat) & np.isnan(tv))
+            w = np.where(eq.all(axis=1), 0.0, w)
+        tw += w[trend].sum()
+        nw += w[~trend].sum()
+    return tw / (nw if nw != 0 else SMALL_NUMBER)
+
+
 def _score_numpy(
     hot: DataFrame,
     library: DataFrame,
@@ -211,49 +282,29 @@ def _score_numpy(
     check_for_self: bool = False,
 ) -> DataFrame:
     """Vectorized scoring kernel: per batch of test series, distances
-    against every (library row, sub-window) pair as numpy tensor ops.
-    The library is grouped by length so each group is one dense
-    (n_series, n_windows, L) array built once per executor."""
+    against every (library row, sub-window) pair as numpy tensor ops
+    (``eta_numpy``). The library is collected and grouped by length
+    into dense matrices (``library_groups``) once, on the driver."""
     import numpy as np
     import pandas as pd
 
-    rows = library.select("is_trend", "points").collect()
-    groups: list[tuple[np.ndarray, np.ndarray]] = []  # (wins, is_trend)
-    by_len: dict[int, list] = {}
-    for r in rows:
-        by_len.setdefault(len(r["points"]), []).append(r)
-    for length, rs in by_len.items():
-        if length < series_length:
-            continue  # no sub-window -> weight exp(-inf) == 0
-        mat = np.vstack([np.asarray(r["points"], dtype=np.float64) for r in rs])
-        wins = np.lib.stride_tricks.sliding_window_view(mat, series_length, axis=1)
-        groups.append((wins, np.array([bool(r["is_trend"]) for r in rs]), mat))
+    groups = library_groups(
+        library.select("is_trend", "points").collect(), series_length
+    )
 
     def score(batches):
         for pdf in batches:
-            etas = []
-            for t in pdf["test_series"]:
-                tv = np.asarray(t, dtype=np.float64)
-                tw = nw = 0.0
-                for wins, trend, mat in groups:
-                    if distance == "l1":
-                        d = np.abs(wins - tv).sum(axis=2).min(axis=1)
-                    else:
-                        dd = wins - tv
-                        d = (dd * dd).sum(axis=2).min(axis=1)
-                    w = np.exp(-lam * d)
-                    if check_for_self and mat.shape[1] == series_length:
-                        # self-exclusion (models.py:201-204): a library
-                        # row bit-equal to the test series votes 0.
-                        # NaN-aware so both impls agree: Spark's array
-                        # equality treats NaN = NaN as true, while raw
-                        # numpy == would exclude NaN points from the
-                        # match and keep a NaN-bearing self row
-                        eq = (mat == tv) | (np.isnan(mat) & np.isnan(tv))
-                        w = np.where(eq.all(axis=1), 0.0, w)
-                    tw += w[trend].sum()
-                    nw += w[~trend].sum()
-                etas.append(tw / (nw if nw != 0 else SMALL_NUMBER))
+            etas = [
+                eta_numpy(
+                    np.asarray(t, dtype=np.float64),
+                    groups,
+                    series_length,
+                    lam,
+                    distance,
+                    check_for_self,
+                )
+                for t in pdf["test_series"]
+            ]
             yield pd.DataFrame(
                 {
                     "counter": pdf["counter"],

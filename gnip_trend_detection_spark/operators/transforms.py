@@ -167,6 +167,51 @@ def apply_chain(df, input_col: str, output_col: str, stages) -> "DataFrame":
     return df
 
 
+def chain_matrix(
+    M,
+    *,
+    reference_length: int,
+    baseline_offset: int,
+    n_smooth: int,
+    sizing_length: int | None = None,
+):
+    """The canonical chain (add_one → unit_normalization → log10 →
+    smoothing [→ sizing]) over a (rows, L) float64 matrix of equal-
+    length series, L >= 1 — the per-matrix kernel of ``chain_numpy``
+    and of the streaming WDT scorer, so batch and stream share one
+    float evaluation order (see ``chain_numpy`` on parity)."""
+    import numpy as np
+
+    rl, off, ns = reference_length, baseline_offset, n_smooth
+    L = M.shape[1]
+    M = M + 1.0  # T1
+    # T2: divisor = leftfold-sum(py_slice[-(rl+off):-off]) / rl
+    lo = max(1, L + 1 - (rl + off))  # 1-based inclusive
+    hi = L - off
+    if off == 0 or hi < lo:
+        total = np.zeros(M.shape[0])
+    else:
+        total = np.cumsum(M[:, lo - 1 : hi], axis=1)[:, -1] / float(rl)
+    denom = np.where(total == 0.0, 1e-5, total)
+    M = M / denom[:, None]
+    # T7: log10 with x <= 0 -> 1e-5 first
+    M = np.log10(np.where(M <= 0.0, 1e-5, M))
+    # T4: trailing moving average, window grows to ns
+    S = np.empty_like(M)
+    head = min(ns - 1, L)
+    if head:
+        cs = np.cumsum(M[:, :head], axis=1)
+        S[:, :head] = cs / np.arange(1.0, head + 1.0)
+    if L >= ns:
+        acc = M[:, 0 : L - ns + 1].copy()
+        for k in range(1, ns):
+            acc += M[:, k : L - ns + 1 + k]
+        S[:, ns - 1 :] = acc / float(ns)
+    if sizing_length is not None:  # T8
+        S = S[:, max(0, L - sizing_length) :]
+    return S
+
+
 def chain_numpy(
     df,
     id_col: str,
@@ -198,8 +243,6 @@ def chain_numpy(
     import numpy as np
     import pandas as pd
 
-    rl, off, ns = reference_length, baseline_offset, n_smooth
-
     def run(batches):
         for pdf in batches:
             ids = pdf[id_col].to_numpy()
@@ -215,31 +258,13 @@ def chain_numpy(
                 M = np.asarray(
                     [np.asarray(arrs.iloc[i], dtype=np.float64) for i in idx]
                 )
-                M = M + 1.0  # T1
-                # T2: divisor = leftfold-sum(py_slice[-(rl+off):-off]) / rl
-                lo = max(1, L + 1 - (rl + off))  # 1-based inclusive
-                hi = L - off
-                if off == 0 or hi < lo:
-                    total = np.zeros(len(idx))
-                else:
-                    total = np.cumsum(M[:, lo - 1 : hi], axis=1)[:, -1] / float(rl)
-                denom = np.where(total == 0.0, 1e-5, total)
-                M = M / denom[:, None]
-                # T7: log10 with x <= 0 -> 1e-5 first
-                M = np.log10(np.where(M <= 0.0, 1e-5, M))
-                # T4: trailing moving average, window grows to ns
-                S = np.empty_like(M)
-                head = min(ns - 1, L)
-                if head:
-                    cs = np.cumsum(M[:, :head], axis=1)
-                    S[:, :head] = cs / np.arange(1.0, head + 1.0)
-                if L >= ns:
-                    acc = M[:, 0 : L - ns + 1].copy()
-                    for k in range(1, ns):
-                        acc += M[:, k : L - ns + 1 + k]
-                    S[:, ns - 1 :] = acc / float(ns)
-                if sizing_length is not None:  # T8
-                    S = S[:, max(0, L - sizing_length) :]
+                S = chain_matrix(
+                    M,
+                    reference_length=reference_length,
+                    baseline_offset=baseline_offset,
+                    n_smooth=n_smooth,
+                    sizing_length=sizing_length,
+                )
                 for j, i in enumerate(idx):
                     out[i] = S[j].tolist()
             yield pd.DataFrame({id_col: ids, output_col: out})

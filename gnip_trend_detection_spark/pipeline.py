@@ -31,7 +31,7 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gnip_trend_detection_spark.operators.models import (
@@ -87,19 +87,35 @@ def _build_linreg(cfg: dict[str, Any]):
 
 def _build_wdt(cfg: dict[str, Any]):
     library = cfg.get("library")
-    if library is None or not isinstance(library, DataFrame):
+    if isinstance(library, str):
+        # an INI can only name the library: a parquet table written by
+        # operators.library.build_library, read through the session the
+        # pipeline runs in (the reference unpickles it, models.py:134-138)
+        spark = SparkSession.getActiveSession()
+        if spark is None:
+            raise ValueError(
+                "WeightedDataTemplates library path needs an active SparkSession"
+            )
+        library = spark.read.parquet(library)
+    if not isinstance(library, DataFrame):
         raise ValueError(
-            "WeightedDataTemplates needs cfg['library'] as a DataFrame "
-            "(series_id, is_trend, points) — the pickle path of the "
-            "reference (models.py:134-138) is replaced by the library table"
+            "WeightedDataTemplates needs cfg['library'] as a parquet path or "
+            "a DataFrame (series_id, is_trend, points)"
         )
+    missing = [
+        c for c in ("series_id", "is_trend", "points") if c not in library.columns
+    ]
+    if missing:
+        raise ValueError(f"WeightedDataTemplates library lacks columns {missing}")
+    distance = str(cfg.get("distance_measure_name", "l1"))
     return lambda df, **kw: weighted_data_templates(
         df,
         library,
         series_length=int(cfg.get("series_length", 50)),
         reference_length=int(cfg.get("reference_length", 210)),
         lam=float(cfg.get("lambda", 1.0)),
-        distance=str(cfg.get("distance_measure_name", "l1")),
+        # the reference's "euclidean" computes L1 (models.py:232-236)
+        distance="l1" if distance == "euclidean" else distance,
         baseline_offset=int(cfg.get("baseline_offset", 40)),
         n_smooth=int(cfg.get("n_smooth", 80)),
         **kw,
@@ -107,8 +123,6 @@ def _build_wdt(cfg: dict[str, Any]):
 
 
 # Reference model names (trend_analyze.py getattr targets) → builder.
-# The reference's "euclidean" distance is L1 (models.py:232-236) and is
-# registered as 'l1' with 'euclidean' as a compatibility alias.
 MODEL_REGISTRY: dict[str, Callable[[dict[str, Any]], Callable[..., DataFrame]]] = {
     "Poisson": _build_poisson,
     "MannKendall": _build_mann_kendall,

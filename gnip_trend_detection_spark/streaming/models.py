@@ -290,12 +290,15 @@ def score_stream_wdt(
     The library ships to executors inside the function closure (the
     stream-side equivalent of the batch broadcast join — libraries are
     O(100..1000) rows). State: the trailing count buffer, O(reference
-    length) per counter."""
-    import math as _math
-
+    length) per counter. The test chain and the η math are the batch
+    numpy kernels (transforms.chain_matrix, wdt.eta_numpy)."""
     import numpy as np
 
-    lib = [(bool(t), np.asarray(p, dtype=float)) for t, p in library_rows]
+    from gnip_trend_detection_spark.operators.models import wdt
+    from gnip_trend_detection_spark.operators.transforms import chain_matrix
+
+    wdt.check_distance(distance)
+    groups = wdt.library_groups(library_rows, series_length)
     # state carries the trailing buffer PLUS the full-series running sum:
     # the reference's warm gate is sum(self.total_series) == 0
     # (models.py:158), which the capped buffer alone cannot answer
@@ -306,41 +309,17 @@ def score_stream_wdt(
         ]
     )
 
-    def transform_test(hist: np.ndarray) -> np.ndarray:
-        s = hist + 1.0
-        lo = max(0, s.size - (reference_length + baseline_offset))
-        hi = s.size - baseline_offset
-        total = s[lo:hi].sum() / reference_length if hi > lo else 0.0
-        if total == 0 or baseline_offset == 0:
-            total = 1e-5
-        s = s / total
-        s = np.log10(np.where(s <= 0, 1e-5, s))
-        out = np.empty_like(s)
-        csum = np.cumsum(s)
-        for i in range(s.size):
-            j = max(0, i - (n_smooth - 1))
-            out[i] = (csum[i] - (csum[j - 1] if j else 0.0)) / (i - j + 1)
-        return out
-
     def eta_for(buf: list[float], total: float) -> float:
         if len(buf) < reference_length or total == 0:
             return 0.0
-        test = transform_test(np.asarray(buf, dtype=float))[-series_length:]
-        tw = nw = 0.0
-        for is_trend, ref in lib:
-            if ref.size < series_length:
-                continue  # no sub-window: weight exp(-inf) == 0
-            wins = np.lib.stride_tricks.sliding_window_view(ref, series_length)
-            if distance == "l1":
-                d = np.abs(wins - test).sum(axis=1).min()
-            else:
-                d = ((wins - test) ** 2).sum(axis=1).min()
-            w = _math.exp(-lam * d)
-            if is_trend:
-                tw += w
-            else:
-                nw += w
-        return tw / (nw if nw != 0 else 0.001)
+        test = chain_matrix(
+            np.asarray([buf], dtype=np.float64),
+            reference_length=reference_length,
+            baseline_offset=baseline_offset,
+            n_smooth=n_smooth,
+            sizing_length=series_length,
+        )[0]
+        return wdt.eta_numpy(test, groups, series_length, lam, distance)
 
     def fn(key, pdfs, state: GroupState):
         (counter,) = key

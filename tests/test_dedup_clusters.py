@@ -119,35 +119,71 @@ def test_source_overlap_matrix(spark):
     assert ac["overlap"] == 0 and ac["jaccard"] == 0.0
 
 
-def test_minhash_numpy_sql_bit_identity(spark):
-    """The Arrow/numpy minhash kernel must stay BIT-identical to the
-    relational path: same md5-derived base hash, same affine families,
-    same shingle lists — any divergence silently breaks oracle parity
-    for every LSH-family query."""
-    from gnip_trend_detection_spark.extras.dedup import minhash_signatures
+_MINHASH_DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, "the quick brown fox jumps over the lazy cat"),
+    (3, "  spaced   out   tokens   survive   splitting  "),
+    (4, "too short"),  # < k tokens: dropped
+    (5, "dup dup dup dup dup"),  # repeated shingles
+    (6, None),  # NULL text: dropped, no crash
+    # NBSP and ideographic space are NOT separators in Java \s+ —
+    # the kernel must agree with tokens(), not use str.split()
+    (7, "Alpha beta gamma\u00a0delta\u3000epsilon zeta ETA"),
+]
 
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "the quick brown fox jumps over the lazy cat"),
-            (3, "  spaced   out   tokens   survive   splitting  "),
-            (4, "too short"),  # < k tokens: dropped by both paths
-            (5, "dup dup dup dup dup"),  # repeated shingles
-            (6, None),  # NULL text: dropped by both paths, no crash
-            # unicode NBSP/ideographic space are NOT separators in
-            # Java \s+ — the numpy path must agree, not use .split()
-            (7, "alpha beta gamma delta　epsilon zeta eta"),
-        ],
-        "doc_id long, text string",
+
+def test_minhash_shingles_match_jvm_tokens(spark):
+    """The minhash kernel's shingles are the k-joins of the JVM
+    extras.text.tokens() output, doc for doc: same lowercasing, same
+    ASCII-only whitespace split, same drops (NULL, < k tokens)."""
+    from pyspark.sql import functions as F
+
+    from gnip_trend_detection_spark.extras.dedup import minhash_signatures
+    from gnip_trend_detection_spark.extras.text import tokens
+
+    k = 3
+    docs = spark.createDataFrame(_MINHASH_DOCS, "doc_id long, text string")
+    got = {
+        r["doc_id"]: r["shingles"]
+        for r in minhash_signatures(docs, k=k).collect()
+    }
+    want = {}
+    for r in docs.select("doc_id", tokens(F.col("text")).alias("t")).collect():
+        t = r["t"]
+        if t is not None and len(t) >= k:
+            want[r["doc_id"]] = [
+                " ".join(t[i : i + k]) for i in range(len(t) - k + 1)
+            ]
+    assert got == want
+    assert set(got) == {1, 2, 3, 5, 7}
+    # NBSP and ideographic space stayed INSIDE tokens
+    assert any("\u00a0" in s for s in got[7])
+    assert any("\u3000" in s for s in got[7])
+
+
+def test_minhash_sig_matches_python_rederivation(spark):
+    """sig[i] = min over distinct shingles of (a_i * h + b_i) mod P,
+    h = the first 4 md5 digest bytes of the shingle, (a_i, b_i) from
+    minhash_params — re-derived in pure Python, no numpy."""
+    import hashlib
+
+    from gnip_trend_detection_spark.extras.dedup import (
+        MINHASH_PRIME,
+        minhash_params,
+        minhash_signatures,
     )
-    a = minhash_signatures(docs, impl="sql").orderBy("doc_id").collect()
-    b = minhash_signatures(docs, impl="numpy").orderBy("doc_id").collect()
-    assert [r.asDict() for r in a] == [r.asDict() for r in b]
-    assert {r["doc_id"] for r in a} == {1, 2, 3, 5, 7}
-    tok7 = next(r for r in a if r["doc_id"] == 7)["shingles"]
-    # NBSP and ideographic space stayed INSIDE tokens on both paths
-    assert any(" " in s for s in tok7)
-    assert any("　" in s for s in tok7)
+
+    docs = spark.createDataFrame(_MINHASH_DOCS, "doc_id long, text string")
+    rows = minhash_signatures(docs, n_hashes=8).collect()
+    assert {r["doc_id"] for r in rows} == {1, 2, 3, 5, 7}
+    params = minhash_params(8)
+    for r in rows:
+        hs = {
+            int.from_bytes(hashlib.md5(s.encode("utf-8")).digest()[:4], "big")
+            for s in r["shingles"]
+        }
+        want = [min((a * h + b) % MINHASH_PRIME for h in hs) for a, b in params]
+        assert r["sig"] == want, r["doc_id"]
 
 
 def test_set_similarity_join_complete_vs_brute_force(spark):

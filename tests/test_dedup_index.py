@@ -147,3 +147,28 @@ def test_probe_plan_never_shuffles_the_index(spark, corpus, tmp_path):
     # map-side), never index rows; both index scans stream straight
     # into BroadcastHashJoins
     assert plan.count("Exchange hashpartitioning") <= 1, plan
+
+
+def test_index_built_under_another_hash_is_refused(spark, corpus, tmp_path):
+    """minhash_signatures has one base hash (md5); an index whose meta
+    names another must raise on probe and on append instead of mixing
+    hash families in one band table."""
+    from gnip_trend_detection_spark.extras.dedup_index import (
+        append_to_index,
+        build_dedup_index,
+        probe_dedup_index,
+    )
+
+    idx = str(tmp_path / "lsh_other_hash")
+    small = corpus.limit(20)
+    build_dedup_index(small, idx, rows_per_band=2)
+    assert spark.read.parquet(f"{idx}/meta").first()["hash_impl"] == "md5"
+    spark.createDataFrame(
+        [(16, 2, 3, "xxhash64")],
+        "n_hashes int, rows_per_band int, k int, hash_impl string",
+    ).write.mode("overwrite").parquet(f"{idx}/meta")
+
+    with pytest.raises(ValueError, match="xxhash64"):
+        probe_dedup_index(spark, idx, small)
+    with pytest.raises(ValueError, match="xxhash64"):
+        append_to_index(small, idx)

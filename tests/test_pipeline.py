@@ -133,3 +133,87 @@ def test_cycle_and_mk_via_registry(spark, counts):
         out = TrendPipeline(cfg).run(counts)
         assert out.columns == ["counter", "interval_start", "count", "eta"]
         assert out.count() > 0
+
+
+WDT_INI = """
+[rebin]
+binning_unit = minutes
+n_binning_unit = 2
+
+[analyze]
+model_name = WeightedDataTemplates
+
+[WeightedDataTemplates_model]
+library = {library}
+series_length = 4
+reference_length = 8
+lambda = 0.5
+distance_measure_name = euclidean
+baseline_offset = 2
+n_smooth = 3
+"""
+
+
+def _wdt_library(spark):
+    import random
+
+    rnd = random.Random(11)
+    return spark.createDataFrame(
+        [
+            (i, i % 2 == 0, [rnd.uniform(-1.0, 1.0) for _ in range(8 + i % 3)])
+            for i in range(12)
+        ],
+        "series_id long, is_trend boolean, points array<double>",
+    )
+
+
+def test_wdt_from_ini_with_parquet_library(spark, counts, tmp_path):
+    """`[analyze] model_name = WeightedDataTemplates` runs from an INI:
+    the `library` key names a parquet table, and the reference's
+    `euclidean` (an L1 distance) scores exactly like 'l1' with the
+    same library passed as a DataFrame."""
+    from gnip_trend_detection_spark.pipeline import (
+        PipelineConfig,
+        TrendPipeline,
+        load_config,
+    )
+
+    lib = _wdt_library(spark)
+    lib_path = str(tmp_path / "library")
+    lib.write.parquet(lib_path)
+    ini = tmp_path / "wdt.cfg"
+    ini.write_text(WDT_INI.format(library=lib_path))
+    cfg = load_config(str(ini))
+    assert cfg.model_params["library"] == lib_path
+
+    got = {
+        (r["counter"], r["interval_start"]): r["eta"]
+        for r in TrendPipeline(cfg).run(counts).collect()
+    }
+    params = dict(cfg.model_params, library=lib, distance_measure_name="l1")
+    want_cfg = PipelineConfig(
+        binning_unit="minutes",
+        n_binning_unit=2,
+        model_name="WeightedDataTemplates",
+        model_params=params,
+    )
+    want = {
+        (r["counter"], r["interval_start"]): r["eta"]
+        for r in TrendPipeline(want_cfg).run(counts).collect()
+    }
+    assert got == want
+    assert any(e != 0.0 for e in want.values())
+
+
+def test_wdt_library_table_must_have_library_columns(spark, tmp_path):
+    from gnip_trend_detection_spark.pipeline import PipelineConfig, TrendPipeline
+
+    lib_path = str(tmp_path / "not_a_library")
+    _wdt_library(spark).drop("points").write.parquet(lib_path)
+    with pytest.raises(ValueError, match="points"):
+        TrendPipeline(
+            PipelineConfig(
+                model_name="WeightedDataTemplates",
+                model_params={"library": lib_path},
+            )
+        )

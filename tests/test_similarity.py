@@ -482,46 +482,18 @@ def test_embedding_simhash_hand_bits_and_buckets(spark):
     assert got[3]["bucket_size"] == 1
 
 
-def test_embedding_simhash_impl_bit_identity(spark):
-    """numpy kernel vs relational HOF fold: every op after the one
-    IEEE multiply is int64, so the two impls must agree EXACTLY on
-    every sketch and bucket size."""
-    import random
-
-    from gnip_trend_detection_spark.extras.similarity import embedding_simhash
-
-    rnd = random.Random(7)
-    rows = [
-        (i, [rnd.uniform(-1, 1) for _ in range(16)]) for i in range(60)
-    ] + [(100, [0.0] * 16), (101, [0.0] * 16)]  # shared-bucket pair
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    kw = dict(n_bits=12, seed=42, dim=16)
-    a = {
-        r["vec_id"]: (r["sketch"], r["bucket_size"])
-        for r in embedding_simhash(df, impl="numpy", **kw).collect()
-    }
-    b = {
-        r["vec_id"]: (r["sketch"], r["bucket_size"])
-        for r in embedding_simhash(df, impl="sql", **kw).collect()
-    }
-    assert a == b
-    assert a[100] == a[101] and a[100][1] >= 2
-
-
-def test_embedding_simhash_sql_impl_rejects_dim_mismatch(spark):
-    """The 'sql' impl must fail LOUDLY on a vector whose length
-    differs from dim (zip_with would otherwise NULL-fold every
-    projection and silently collapse all rows into one bucket)."""
+def test_embedding_simhash_rejects_dim_mismatch(spark):
+    """A vector whose length differs from dim must fail LOUDLY, not
+    collapse into some sketch bucket."""
     import pytest as _pytest
-    from py4j.protocol import Py4JJavaError
 
     from gnip_trend_detection_spark.extras.similarity import embedding_simhash
 
     df = spark.createDataFrame(
         [(1, [0.5] * 8)], "vec_id long, embedding array<double>"
     )
-    with _pytest.raises((Py4JJavaError, Exception)):
-        embedding_simhash(df, n_bits=4, seed=42, dim=16, impl="sql").collect()
+    with _pytest.raises(Exception, match="mismatch|shape|dimension"):
+        embedding_simhash(df, n_bits=4, seed=42, dim=16).collect()
 
 
 def test_pq_perfectly_codable_corpus_has_zero_error(spark):

@@ -126,6 +126,57 @@ def test_wdt_matches_shadow(spark, fixture_data, distance, impl):
         assert got[i * 3600.0] == pytest.approx(exp, rel=1e-9), f"point {i}"
 
 
+@pytest.mark.parametrize("impl", ["hof", "numpy"])
+def test_wdt_rejects_unknown_distance(spark, fixture_data, impl):
+    """Only 'l1' and 'sq_l2' exist; any other name (the reference's
+    'euclidean' included — the pipeline maps that one to 'l1') is a
+    ValueError naming both, not a silent squared-L2."""
+    from pyspark.sql import functions as F
+
+    from gnip_trend_detection_spark.operators.models import weighted_data_templates
+
+    _, library = fixture_data
+    ser = spark.createDataFrame(
+        [("c1", 0.0, 1.0)], "counter string, e double, count double"
+    ).select("counter", F.timestamp_seconds("e").alias("bin_start"), "count")
+    lib = spark.createDataFrame(
+        [(i, t, pts) for i, (t, pts) in enumerate(library)],
+        "series_id long, is_trend boolean, points array<double>",
+    )
+    with pytest.raises(ValueError, match="'l1', 'sq_l2'"):
+        weighted_data_templates(ser, lib, distance="euclidean", impl=impl)
+
+
+def test_stream_wdt_rejects_unknown_distance(spark, fixture_data):
+    from gnip_trend_detection_spark.streaming.models import score_stream_wdt
+
+    _, library = fixture_data
+    stream = spark.createDataFrame(
+        [("c1", 1.0)], "counter string, count double"
+    )
+    with pytest.raises(ValueError, match="'l1', 'sq_l2'"):
+        score_stream_wdt(
+            stream, library, SER_LEN, REF_LEN, distance="cosine"
+        )
+
+
+def test_library_groups_ship_matrices_not_window_views(fixture_data):
+    """The numpy WDT closure pickles library_groups' output: dense
+    per-length matrices only (a pickled sliding_window_view would be a
+    series_length-fold copy); rows shorter than series_length drop."""
+    import pickle
+
+    from gnip_trend_detection_spark.operators.models.wdt import library_groups
+
+    _, library = fixture_data
+    groups = library_groups(library, SER_LEN)
+    assert sorted(m.shape for m, _ in groups) == [(1, 9), (1, 10), (2, 8)]
+    assert all(m.flags.owndata for m, _ in groups)
+    rows = [(i % 2 == 0, [float(j) for j in range(100)]) for i in range(10)]
+    raw_bytes = 10 * 100 * 8
+    assert len(pickle.dumps(library_groups(rows, 20))) < 2 * raw_bytes
+
+
 def test_wdt_warm_gate_full_series(spark, fixture_data):
     """A counter with nonzero history that then goes all-zero for
     >= reference_length bins must still be scored (the reference gates
