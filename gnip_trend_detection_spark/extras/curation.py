@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from gnip_trend_detection_spark.extras import decontam, sample, text
+from gnip_trend_detection_spark.functions.core import materialize_col
 
 
 def curate(
@@ -65,7 +66,7 @@ def curate(
     toks = F.col("__toks")
     pred = text.lang_pred_from_toks(toks)
     scored = (
-        text.materialize_col(
+        materialize_col(
             canon.select("doc_id", text_col),
             text.tokens(F.col(text_col)),
             "__toks",

@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gnip_trend_detection_spark.functions.core import materialize_col
+
 EN_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
 
 LANG_WORDLISTS = {
@@ -215,30 +217,6 @@ def gopher_rules(
         stop_ok.alias("stop_ok"),
         (wc_ok & mwl_ok & alpha_ok & stop_ok).alias("keep"),
     )
-
-
-def materialize_col(df: DataFrame, expr: Column, out_col: str) -> DataFrame:
-    """Append ``expr`` as a column that is evaluated exactly ONCE per
-    row, via an outer-generate barrier: posexplode_outer(array(expr))
-    makes the value a GENERATOR OUTPUT attribute, which neither
-    CollapseProject nor filter-pushdown alias substitution can inline
-    back into consuming expressions. A plain withColumn/select alias
-    is substituted into every reference during optimization, so an
-    expensive expression (tokenize) referenced N times by row-local
-    consumers (quality blend, language ID) is re-evaluated N times per
-    row — measured 2x wall at the 10x replica for the fused curation
-    pipeline. Same trick and same outer-generate reasoning as
-    queries._explode_arr (a plain Generate would let
-    InferFiltersFromGenerate push `size(...) > 0` below the
-    projection, re-inlining the tree it exists to materialize); the
-    isnotnull(pos) filter restores inner semantics and cannot be
-    pushed below the Generate because pos is generated. A NULL expr
-    value survives as a NULL cell (array(NULL) emits pos=0, val=NULL).
-    """
-    out = df.select(
-        "*", F.posexplode_outer(F.array(expr)).alias("__mat_pos", out_col)
-    )
-    return out.filter(F.col("__mat_pos").isNotNull()).drop("__mat_pos")
 
 
 def lang_pred_from_toks(toks_col: Column) -> Column:

@@ -1,4 +1,5 @@
-"""Scalar Column helpers shared across operators.
+"""Scalar Column helpers shared across operators and sources, and
+materialize_col, which evaluates an expression once per row.
 
 All of these stay JVM-side (no Python UDFs) so they fold into
 whole-stage codegen.
@@ -6,7 +7,7 @@ whole-stage codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Fixed-width binning units the reference supports: it builds the grid
@@ -80,3 +81,28 @@ def sig_round2_py(x: float) -> float:
         return 0.0
     scale = 10.0 ** (-math.floor(math.log10(x)) + 1)
     return math.floor(x * scale + 0.5) / scale
+
+
+def materialize_col(df: DataFrame, expr: Column, out_col: str) -> DataFrame:
+    """Append ``expr`` as a column that is evaluated exactly ONCE per
+    row, via an outer-generate barrier: posexplode_outer(array(expr))
+    makes the value a GENERATOR OUTPUT attribute, which neither
+    CollapseProject nor filter-pushdown alias substitution can inline
+    back into consuming expressions. A plain withColumn/select alias
+    is substituted into every reference during optimization, so an
+    expensive expression (tokenize, the CSV timestamp ladder)
+    referenced N times by row-local consumers (quality blend, language
+    ID, a null filter plus the projection) is re-evaluated N times per
+    row — measured 2x wall at the 10x replica for the fused curation
+    pipeline. Same trick and same outer-generate reasoning as
+    queries._explode_arr (a plain Generate would let
+    InferFiltersFromGenerate push `size(...) > 0` below the
+    projection, re-inlining the tree it exists to materialize); the
+    isnotnull(pos) filter restores inner semantics and cannot be
+    pushed below the Generate because pos is generated. A NULL expr
+    value survives as a NULL cell (array(NULL) emits pos=0, val=NULL).
+    """
+    out = df.select(
+        "*", F.posexplode_outer(F.array(expr)).alias("__mat_pos", out_col)
+    )
+    return out.filter(F.col("__mat_pos").isNotNull()).drop("__mat_pos")

@@ -27,6 +27,7 @@ from gnip_trend_detection_spark.extras import (
     similarity,
     text,
 )
+from gnip_trend_detection_spark.functions.core import materialize_col
 from gnip_trend_detection_spark.operators import transforms
 from gnip_trend_detection_spark.operators.correlate import (
     pair_correlations,
@@ -2110,12 +2111,12 @@ def q_quality_blend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (repetition_stats has no bigram support there), so the kept row
     # set is identical by construction.
     # the token array is materialized once per row via the generate
-    # barrier (text.materialize_col) — the plain withColumn alias was
+    # barrier (materialize_col) — the plain withColumn alias was
     # inlined into every quality/repetition reference by the
     # optimizer, re-tokenizing ~9x per row (same trap measured 2x at
     # the 10x replica on the curation pipeline)
     qr = (
-        text.materialize_col(
+        materialize_col(
             docs.select("doc_id", "text"),
             text.tokens(F.col("text")),
             "toks",
@@ -3868,7 +3869,7 @@ def q_lang_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lang_id IS docs.select of this expression), one scan and one
     grouped aggregate, zero joins (guide §2.4)."""
     docs = _docs(spark, sf_dir)
-    t = text.materialize_col(
+    t = materialize_col(
         docs.select("lang", "source", "text"),
         F.coalesce(
             text.tokens(F.col("text")), F.array().cast("array<string>")

@@ -13,12 +13,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _host_driver_mem() -> str:
+    """A quarter of physical RAM (at least 1g): in local mode the driver
+    JVM is also every executor, and the Python workers and the page
+    cache need the rest."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1024, (phys // 4) >> 20)}m"
+
+
 def get_spark(
     app_name: str = "gnip-trend-detection-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Unset SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM default to the
+    host: ``os.cpu_count()`` task cores and a quarter of physical RAM
+    for the driver heap."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
     builder = (
@@ -49,7 +60,10 @@ def get_spark(
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # default 100-entry generated-class cache evicts under a

@@ -18,18 +18,32 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gnip_trend_detection_spark import schemas
+from gnip_trend_detection_spark.functions.core import materialize_col
 
 # The formats seen in the reference repo + common ISO variants, then
 # the frequent dateutil-parseable layouts (month-name, '/'-separated,
 # offset-suffixed, RFC/ctime) — the reference accepts anything
 # dateutil.parser.parse eats (analysis.py:59), and real-world CSVs
-# like "Aug 24 2014 00:00" hit the gap first. Coalesce stops at the
-# first matching format, so order = likelihood; ambiguous x/y/z dates
+# like "Aug 24 2014 00:00" hit the gap first. Ambiguous x/y/z dates
 # resolve month-first like dateutil's US default.
+#
+# Coalesce stops at the first rung that parses, and every rung that
+# fails throws and catches a JVM exception. So the three fixed-width
+# layouts reach no failing rung: they come first (compact, ISO 'T',
+# ISO space), and the first two sit behind a one-character
+# precondition (_TS_GUARDS) that skips the formatter on a row it
+# cannot match. A guard must be a NECESSARY condition of its pattern,
+# skipping only rows the rung would reject, and no two rungs parse one
+# string to different instants; together these keep every result
+# independent of rung order (tests/test_csv_sources.py pins both).
+# Guards are plain substring compares: an rlike guard costs about as
+# much as the exception it avoids. The loaders evaluate the ladder
+# once per row behind the materialize_col generate barrier; a plain
+# alias would be substituted into the null filter and parsed twice.
 _TS_FORMATS = (
     "yyyyMMddHHmmss",
-    "yyyy-MM-dd HH:mm:ss",
     "yyyy-MM-dd'T'HH:mm:ss",
+    "yyyy-MM-dd HH:mm:ss",
     "yyyy-MM-dd HH:mm:ss.SSSSSS",
     "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
     "yyyy-MM-dd",
@@ -64,12 +78,25 @@ _TS_FORMATS_WEEKDAY_TAIL = (
 )
 _WEEKDAY_PREFIX = r"^(?i)(Mon|Tue|Wed|Thu|Fri|Sat|Sun)[a-z]*,?\s+"
 
+# Compact has digits at position 5 where every ISO layout has '-';
+# ISO 'T' has its separator at position 11 where ISO space has ' '.
+_TS_GUARDS = {
+    "yyyyMMddHHmmss": lambda t: F.substring(t, 5, 1) != "-",
+    "yyyy-MM-dd'T'HH:mm:ss": lambda t: F.substring(t, 11, 1) != " ",
+}
+
+
+def _rung(t: Column, fmt: str) -> Column:
+    parsed = F.try_to_timestamp(t, F.lit(fmt))
+    guard = _TS_GUARDS.get(fmt)
+    return parsed if guard is None else F.when(guard(t), parsed)
+
 
 def lenient_timestamp(col: Column) -> Column:
     trimmed = F.trim(col)
     stripped = F.regexp_replace(trimmed, _WEEKDAY_PREFIX, "")
     return F.coalesce(
-        *[F.try_to_timestamp(trimmed, F.lit(f)) for f in _TS_FORMATS],
+        *[_rung(trimmed, f) for f in _TS_FORMATS],
         *[
             F.try_to_timestamp(stripped, F.lit(f))
             for f in _TS_FORMATS_WEEKDAY_TAIL
@@ -93,11 +120,15 @@ def load_counts_csv(
         reader = reader.option("recursiveFileLookup", "true").option(
             "pathGlobFilter", f"*{postfix}"
         )
-    raw = reader.csv(paths)
+    raw = materialize_col(
+        reader.csv(paths),
+        lenient_timestamp(F.col("interval_start_raw")),
+        "interval_start",
+    )
     return (
         raw.select(
             F.trim("counter").alias("counter"),
-            lenient_timestamp(F.col("interval_start_raw")).alias("interval_start"),
+            "interval_start",
             F.col("duration_sec").cast("double").alias("duration_sec"),
             F.col("count").cast("double").alias("count"),
         )
@@ -120,11 +151,15 @@ def load_counts_legacy_csv(
     the optional rule filter is trim-compared on both sides
     (reference utils.py:1-2) and pushes down to the scan.
     """
-    raw = spark.read.schema(schemas.COUNTS_LEGACY_CSV).csv(paths)
+    raw = materialize_col(
+        spark.read.schema(schemas.COUNTS_LEGACY_CSV).csv(paths),
+        lenient_timestamp(F.col("interval_stop_raw")),
+        "__stop",
+    )
     df = raw.select(
         F.trim("rule").alias("counter"),
         (
-            lenient_timestamp(F.col("interval_stop_raw"))
+            F.col("__stop")
             - F.make_dt_interval(secs=F.col("duration_sec").cast("double"))
         ).alias("interval_start"),
         F.col("duration_sec").cast("double").alias("duration_sec"),

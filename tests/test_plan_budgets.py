@@ -221,3 +221,27 @@ def test_plan_budget(spark, name):
     assert n_exchange <= ceiling, (
         f"{name}: {n_exchange} exchanges > ceiling {ceiling}"
     )
+
+
+@pytest.mark.parametrize("loader", ["load_counts_csv", "load_counts_legacy_csv"])
+def test_csv_loader_parses_each_timestamp_once(spark, tmp_path, loader):
+    """The timestamp ladder sits behind the materialize_col generate
+    barrier, so each format's try_to_timestamp appears ONCE in the
+    executed plan: without it the isNotNull filter gets the parse
+    substituted in, and every row runs the ladder twice."""
+    from collections import Counter
+
+    from gnip_trend_detection_spark.sources import csv
+
+    p = tmp_path / "counts.csv"
+    p.write_text("2014-08-24T13:45:10,60,1,a\n")
+    plan = (
+        getattr(csv, loader)(spark, str(p))
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    want = Counter(csv._TS_FORMATS + csv._TS_FORMATS_WEEKDAY_TAIL)
+    assert len(re.findall(r"\bgettimestamp\(", plan)) == sum(want.values()) == 23
+    for fmt, n in want.items():
+        assert plan.count(f", {fmt}, TimestampType") == n, fmt
